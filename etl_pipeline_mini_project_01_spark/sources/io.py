@@ -16,7 +16,8 @@ from __future__ import annotations
 import os
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 
 def write_table(df: DataFrame, path: str, mode: str = "overwrite",
@@ -35,8 +36,10 @@ def write_csv_fallback(df: DataFrame, path: str) -> None:
 
 
 def atomic_overwrite(df: DataFrame, path: str,
-                     partition_by: list[str] | None = None) -> None:
+                     partition_by: list[str] | None = None) -> int:
     """M6 'refresh concurrently': materialize to a staging dir, then swap.
+    Returns the number of rows written, counted by an Observation on the
+    write itself (no read-back count job).
 
     Readers of `path` never observe a partial table; equivalent of
     REFRESH MATERIALIZED VIEW CONCURRENTLY (gold_refresh.py:52-55).
@@ -48,7 +51,9 @@ def atomic_overwrite(df: DataFrame, path: str,
     """
     staging = path.rstrip("/") + ".__staging__"
     backup = path.rstrip("/") + ".__old__"
-    write_table(df, staging, "overwrite", partition_by)
+    obs = Observation()
+    write_table(df.observe(obs, F.count(F.lit(1)).alias("rows")), staging,
+                "overwrite", partition_by)
     for p in (backup,):
         if os.path.exists(p):
             shutil.rmtree(p)
@@ -57,15 +62,18 @@ def atomic_overwrite(df: DataFrame, path: str,
     os.rename(staging, path)
     if os.path.exists(backup):
         shutil.rmtree(backup)
+    return int(obs.get["rows"])
 
 
 def catalog_summary(spark: SparkSession) -> dict[str, int]:
     """S11: catalog introspection (model_executor.py:139-194 counts of
-    schemas/tables/matviews)."""
-    dbs = spark.catalog.listDatabases()
-    n_tables = 0
-    for db in dbs:
-        n_tables += len(spark.catalog.listTables(db.name))
+    schemas/tables/matviews). SHOW DATABASES / SHOW TABLES are answered
+    by the driver from the catalog, where `spark.catalog.listTables`
+    starts Spark jobs. The counts are the same: both list the temp views
+    under every database."""
+    dbs = [r[0] for r in spark.sql("SHOW DATABASES").collect()]
+    n_tables = sum(len(spark.sql(f"SHOW TABLES IN `{db}`").collect())
+                   for db in dbs)
     return {"databases": len(dbs), "tables": n_tables}
 
 

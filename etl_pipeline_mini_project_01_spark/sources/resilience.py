@@ -11,15 +11,18 @@ S10: the reference builds CREATE TABLE from a Polars-dtype map
 (hashtag_data_loader.py:94-136); Spark derives DDL from df.schema.
 
 M6: per-view failure-tolerant refresh (gold_refresh.py:56-66: one broken
-view must not block the other six).
+view must not block the other six); the views refresh concurrently, like
+the reference's independent REFRESH MATERIALIZED VIEW statements.
 """
 
 from __future__ import annotations
 
 import time
 from collections.abc import Callable, Mapping
+from concurrent.futures import ThreadPoolExecutor
 from typing import Any, TypeVar
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 
 T = TypeVar("T")
@@ -52,19 +55,40 @@ def schema_to_ddl(df: DataFrame, table: str,
     return f"CREATE TABLE {clause}{table} (\n  {cols}\n) USING parquet"
 
 
+def run_concurrently(spark: SparkSession,
+                     tasks: Mapping[str, Callable[[], T]]) -> dict[str, T]:
+    """Run independent driver-side tasks at once, one thread per task, and
+    return their results in `tasks` order. Each thread carries the
+    caller's job group, description and tags, so the jobs it starts stay
+    attributed to the caller. Every task runs to the end; then the first
+    exception, in `tasks` order, is raised. The tasks share the session:
+    they must not change its state (confs, checkpoint dir, temp views)."""
+    if not tasks:
+        return {}
+    with ThreadPoolExecutor(max_workers=len(tasks)) as pool:
+        futures = {name: pool.submit(inheritable_thread_target(spark)(task))
+                   for name, task in tasks.items()}
+    return {name: fut.result() for name, fut in futures.items()}
+
+
 def refresh_views(spark: SparkSession,
                   builders: Mapping[str, Callable[[], DataFrame]],
-                  writer: Callable[[str, DataFrame], None]) -> dict[str, Any]:
+                  writer: Callable[[str, DataFrame], Any]) -> dict[str, Any]:
     """M6: refresh each materialized view independently; one failure never
-    blocks the rest (gold_refresh.py tolerates partial failure). Returns
-    per-view status + timing, like the reference's refresh report."""
-    report: dict[str, Any] = {}
-    for name, build in builders.items():
+    blocks the rest (gold_refresh.py tolerates partial failure). The views
+    are built and written concurrently (`run_concurrently`), so builders
+    must not change session state. Returns per-view status, timing and
+    the writer's result (`rows`), in `builders` order, like the
+    reference's refresh report."""
+    def refresh(name: str, build: Callable[[], DataFrame]) -> dict[str, Any]:
         t0 = time.perf_counter()
         try:
-            writer(name, build())
-            report[name] = {"ok": True,
-                            "sec": round(time.perf_counter() - t0, 2)}
+            rows = writer(name, build())
         except Exception as exc:  # noqa: BLE001 - tolerance by contract
-            report[name] = {"ok": False, "error": str(exc)[:200]}
-    return report
+            return {"ok": False, "error": str(exc)[:200]}
+        return {"ok": True, "sec": round(time.perf_counter() - t0, 2),
+                "rows": rows}
+
+    return run_concurrently(
+        spark, {name: (lambda n=name, b=build: refresh(n, b))
+                for name, build in builders.items()})

@@ -6,13 +6,31 @@ import os
 
 from pyspark.sql import functions as F
 
-from etl_pipeline_mini_project_01_spark.pipeline import run_pipeline
+from etl_pipeline_mini_project_01_spark.pipeline import (
+    GOLD_VIEWS,
+    build_bronze,
+    build_silver,
+    run_pipeline,
+)
 from etl_pipeline_mini_project_01_spark.sources.io import (
     atomic_overwrite,
+    catalog_summary,
     write_csv_fallback,
 )
 
 SF_DIR = "/root/testdata/sf0.001"
+
+#: Executed jobs of one run_pipeline at sf0.001 (bronze, 3 silver
+#: tables, 7 gold refreshes, DDL and catalog summary). Identical across
+#: runs and thread interleavings; lower it when a change saves jobs.
+PIPELINE_JOB_BUDGET = 54
+
+STAT_TABLES = {
+    "bronze_rows": "bronze.events",
+    **{f"silver_{t}_rows": f"silver.{t}"
+       for t in ("dim_date", "dim_account", "fact")},
+    **{f"gold_{v}_rows": f"gold.{v}" for v in GOLD_VIEWS},
+}
 
 
 def test_full_pipeline(spark, tmp_path):
@@ -23,8 +41,83 @@ def test_full_pipeline(spark, tmp_path):
     assert stats["silver_dim_account_rows"] == 150
     for view in ("g1_daily_engagement_summary", "g6_daily_event_trends"):
         assert stats[f"gold_{view}_rows"] > 0
-    # bronze partitioned by nothing here; gold tables re-readable
+    # The row counts come from Observations on the writes; they must equal
+    # what the catalog tables read back, for all 11 tables.
+    assert len(STAT_TABLES) == 11
+    for stat, table in STAT_TABLES.items():
+        assert spark.table(table).count() == stats[stat], table
+    assert stats["ddl_sec"] >= 0
+    # bronze is date_key-partitioned; gold tables re-readable by path
     assert spark.read.parquet(f"{out}/gold/g4_hashtag_performance").count() > 0
+
+
+def _settled(sc):
+    """Wait until the status store has seen every posted job event."""
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return sc.statusTracker()
+
+
+def test_pipeline_jobs_inherit_job_group_and_fit_budget(spark, tmp_path):
+    """The concurrent silver writes and gold refreshes run in driver
+    threads; every job they start must still carry the caller's job
+    group, and the run must stay within its job budget."""
+    sc = spark.sparkContext
+    group = "test-pipeline-job-budget"
+    ungrouped_before = set(_settled(sc).getJobIdsForGroup(None))
+    sc.setJobGroup(group, "run_pipeline job budget")
+    try:
+        run_pipeline(spark, SF_DIR, str(tmp_path / "medallion"))
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    tracker = _settled(sc)
+    ids = sorted(tracker.getJobIdsForGroup(group))
+    # No job of the run escaped the group: none started ungrouped, and
+    # the group's job ids are one unbroken run of ids.
+    assert set(tracker.getJobIdsForGroup(None)) <= ungrouped_before
+    assert ids == list(range(ids[0], ids[-1] + 1))
+    assert len(ids) <= PIPELINE_JOB_BUDGET, len(ids)
+
+
+def test_builders_leave_session_conf_unchanged(spark):
+    """Precondition of the concurrent refresh: the silver and g1-g7
+    builders run in threads sharing one session, so none may change
+    session state. load_table re-applies session.harden's confs (same
+    values each time), so the snapshot is taken after they are set."""
+    from etl_pipeline_mini_project_01_spark.plans import registry
+    from etl_pipeline_mini_project_01_spark.session import harden
+
+    registry.load_all_plans()
+    harden(spark)
+    before = spark.conf.getAll
+    bronze = build_bronze(spark, SF_DIR, "run_conf")
+    assert set(build_silver(spark, SF_DIR, bronze)) == {
+        "dim_date", "dim_account", "fact"}
+    assert spark.conf.getAll == before, "silver builders"
+    for view in GOLD_VIEWS:
+        registry.QUERIES[view](spark, SF_DIR)
+        assert spark.conf.getAll == before, view
+
+
+def test_catalog_summary_matches_catalog_api(spark, tmp_path):
+    """SHOW DATABASES / SHOW TABLES count what listDatabases /
+    listTables count, temp views included."""
+    spark.sql("CREATE DATABASE IF NOT EXISTS cs_db "
+              f"LOCATION '{tmp_path}/cs_db.db'")
+    spark.range(3).write.mode("overwrite").saveAsTable("cs_db.t")
+    spark.range(3).createOrReplaceTempView("cs_temp_view")
+    try:
+        dbs = spark.catalog.listDatabases()
+        want = {"databases": len(dbs),
+                "tables": sum(len(spark.catalog.listTables(db.name))
+                              for db in dbs)}
+        assert catalog_summary(spark) == want
+        assert want["tables"] >= len(dbs) + 1  # the temp view, per database
+    finally:
+        spark.catalog.dropTempView("cs_temp_view")
+        spark.sql("DROP TABLE IF EXISTS cs_db.t")
+        spark.sql("DROP DATABASE IF EXISTS cs_db")
 
 
 def test_atomic_overwrite_swaps(spark, tmp_path):

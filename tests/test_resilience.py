@@ -42,19 +42,32 @@ def test_schema_to_ddl(spark):
 
 
 def test_refresh_views_tolerates_partial_failure(spark):
+    import time
+
     written = {}
+
+    def slow():
+        time.sleep(0.5)  # finishes last: the report still lists it first
+        return spark.range(2)
 
     def boom():
         raise RuntimeError("bad view")
 
+    def write(name, df):
+        written[name] = df.count()
+        return written[name]
+
     report = refresh_views(
         spark,
-        {"good": lambda: spark.range(3), "bad": boom,
+        {"slow": slow, "good": lambda: spark.range(3), "bad": boom,
          "also_good": lambda: spark.range(1)},
-        writer=lambda name, df: written.__setitem__(name, df.count()))
-    assert report["good"]["ok"] and report["also_good"]["ok"]
-    assert not report["bad"]["ok"] and "bad view" in report["bad"]["error"]
-    assert written == {"good": 3, "also_good": 1}
+        writer=write)
+    assert list(report) == ["slow", "good", "bad", "also_good"]
+    assert [report[n]["ok"] for n in report] == [True, True, False, True]
+    assert "bad view" in report["bad"]["error"]
+    assert {n: report[n]["rows"] for n in ("slow", "good", "also_good")} \
+        == {"slow": 2, "good": 3, "also_good": 1}
+    assert written == {"slow": 2, "good": 3, "also_good": 1}
 
 
 def test_sentiment_backend_factory(spark):
